@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   * has no real cluster; two parallelism levels in local mode are the
   * sanctioned stand-in (see BASELINE.md).
   *
-  * One measurement per JVM (scripts/scaling.sh orchestrates both and
+  * One measurement per JVM (scripts/scaling_pair.sh orchestrates both and
   * computes the efficiency) — sharing a JVM between the two runs biases
   * the second with the first's heap/GC state.
   *

@@ -42,14 +42,6 @@ object ErPipeline {
       // (email/phone) stay far below it.
       maxBlock: Int = 48,
       hotWindow: Int = 6,
-      // Hot blocks above hotRankCap rows stop using the single window
-      // (row_number over one key = every row of the key in ONE task — a
-      // straggler/spill at 10^8-row blocks) and switch to the distributed
-      // rank path (range-partition + per-partition rank + offset join),
-      // which emits the IDENTICAL sorted-neighborhood pairs with no task
-      // ever owning a whole key. The default keeps small/medium blocks on
-      // the cheaper single-window plan.
-      hotRankCap: Int = 65536,
       // 16-bit buckets keep mean occupancy ~n/65k per table; at larger n
       // raise bits ~ log2(n/4) so in-bucket pairing stays linear in n
       lshBits: Int = 16,
@@ -191,7 +183,7 @@ object ErPipeline {
       signatures: DataFrame, touchedBlocks: Option[DataFrame],
       cfg: Config): DataFrame = {
     // ONE explicit bk-keyed exchange feeds every consumer below (hot-key
-    // sizing agg, cold collect_list agg, hot window) — each would
+    // sizing agg, cold collect_list agg, hot rank) — each would
     // otherwise plan its own exchange, and AQE would coalesce them by
     // MAP-side bytes even though the cold path explodes ~C(block,2)
     // pairs downstream (measured round 6: candidates was 24.7 s of the
@@ -199,7 +191,7 @@ object ErPipeline {
     // coalesced tasks). Explicit width = scheduler width (never a local
     // constant); per-key skew is unchanged vs the implicit exchanges —
     // cold keys are <= maxBlock rows and hot keys already flow through
-    // the windowed/ranked paths built for them.
+    // the distributed rank built for them.
     val keyed = keyedBlocks(signatures, touchedBlocks)
       .repartition(graft.core.Par.spread(signatures.sparkSession), col("bk"))
     // Two-phase block sizing that satisfies BOTH measured lessons:
@@ -218,11 +210,12 @@ object ErPipeline {
     // counts a whole key in one task.
     val hotKeys = keyed.groupBy("bk").agg(count(lit(1)).as("bk_n"))
       .filter(col("bk_n") > cfg.maxBlock)
+      .select("bk")
 
     // cold blocks (<= maxBlock members): gather the block into one bounded
     // array and emit all C(n,2) pairs locally — no self-join, no second
     // shuffle. The bound is what makes collect_list safe.
-    val cold = keyed.join(hotKeys.select("bk"), Seq("bk"), "left_anti")
+    val cold = keyed.join(hotKeys, Seq("bk"), "left_anti")
       .groupBy("bk").agg(array_sort(collect_list("url")).as("us"))
       .filter(size(col("us")) >= 2)
     val coldPairs = cold.select(
@@ -235,27 +228,15 @@ object ErPipeline {
       .select(col("block_key"), col("p.url1"), col("p.url2"))
 
     // hot blocks: sorted-neighborhood — each member pairs with the next
-    // hotWindow members in url order; cost is linear in block size.
-    // Small/medium hot blocks rank via one window; blocks above
-    // hotRankCap rank via the distributed path (no whole-key task).
-    val hotAll = keyed.join(hotKeys, Seq("bk")) // small side -> broadcast
-    val hot = hotAll.filter(col("bk_n") <= cfg.hotRankCap)
-      .withColumn("rn", row_number().over(Window.partitionBy("bk").orderBy("url")))
-    val hotPairs = hot.as("a")
-      .join(hot.as("b"), col("a.bk") === col("b.bk")
-        && col("b.rn") > col("a.rn") && col("b.rn") <= col("a.rn") + cfg.hotWindow)
-      .select(col("a.bk").as("block_key"), col("a.url").as("url1"), col("b.url").as("url2"))
-
-    // giant blocks: identical pairs, distributed rank. The neighborhood
-    // probe is an equi join on (bk, rank) — the hot key spreads across
-    // rank values, so neither the ranking nor the pairing ever puts a
-    // whole key into one task (vs the self-join on bk above, which
-    // hash-partitions the whole key to one join partition).
-    val ranked = rankWithinBlocks(hotAll.filter(col("bk_n") > cfg.hotRankCap)
-      .select(col("bk"), col("url")))
-    val giantProbe = ranked.select(col("bk"), col("url").as("url1"),
+    // hotWindow members in url order, so cost is linear in block size.
+    // The rank is distributed (no task ever owns a whole key) and the
+    // neighborhood probe is an equi join on (bk, rank): the hot key
+    // spreads across rank values, so neither the ranking nor the pairing
+    // puts a whole key into one task.
+    val ranked = rankWithinBlocks(keyed.join(hotKeys, Seq("bk"), "left_semi"))
+    val hotProbe = ranked.select(col("bk"), col("url").as("url1"),
       explode(sequence(col("rn") + 1, col("rn") + cfg.hotWindow)).as("rn2"))
-    val giantPairs = giantProbe
+    val hotPairs = hotProbe
       .join(ranked.select(col("bk"), col("url").as("url2"), col("rn").as("rn2")),
         Seq("bk", "rn2"))
       .select(col("bk").as("block_key"), col("url1"), col("url2"))
@@ -268,7 +249,7 @@ object ErPipeline {
     // less. Skew bound: a record's pair fan-out is bounded by its block
     // memberships (cold <= maxBlock - 1 per key, hot <= 2*hotWindow per
     // key), never by corpus size.
-    val deduped = coldPairs.unionByName(hotPairs).unionByName(giantPairs)
+    val deduped = coldPairs.unionByName(hotPairs)
       .repartition(graft.core.Par.spread(signatures.sparkSession), col("url1"))
       .groupBy("url1", "url2")
       // A8 dedup, deterministic min; the shared-key count ranks pair
@@ -321,9 +302,9 @@ object ErPipeline {
     */
   def candidatesPooled(sourceSigs: DataFrame, searchSigs: DataFrame,
       cfg: Config = Config()): DataFrame = {
-    // Materialized once (eager localCheckpoint): up to five plan branches
-    // consume each exploded table (hot sizing, cold anti-join, band semi
-    // joins); unmaterialized, every branch would re-evaluate the caller's
+    // Materialized once (eager localCheckpoint): several plan branches
+    // consume each exploded table (hot sizing, cold anti join, hot semi
+    // join); unmaterialized, every branch would re-evaluate the caller's
     // signature expressions over the whole pool (the same per-branch trap
     // the unpooled path avoids by caching sigs in run()). localCheckpoint
     // instead of cache(): the blocks are released by the ContextCleaner
@@ -345,60 +326,35 @@ object ErPipeline {
     // members nearest its own url position, so hot pair volume is
     // O(|src-block| x window) (the reference caps pooled ANN lookups with
     // n_closest BEFORE materializing candidates, run_search.py:148-150).
-    // The window/prefix-sum routing for hot keys bands on the MERGED
-    // stream size (search + source rows): a key with a modest search
-    // side but a giant source pool would otherwise put the whole merged
-    // stream into one window task — source counts are gathered only for
-    // the (few) hot keys, via a semi join against that small table.
     val hotSea = sea.groupBy("bk").agg(count(lit(1)).as("sea_n"))
       .filter(col("sea_n") > cfg.maxBlock)
-    val hotSrcN = src.join(hotSea.select("bk"), Seq("bk"), "left_semi")
-      .groupBy("bk").agg(count(lit(1)).as("src_n"))
-    val hotSizes = hotSea.join(hotSrcN, Seq("bk"), "left_outer")
-      .withColumn("tot_n", col("sea_n") + coalesce(col("src_n"), lit(0L)))
+      .select("bk")
 
-    val coldPairs = src.join(hotSea.select("bk"), Seq("bk"), "left_anti")
-      .join(sea.join(hotSea.select("bk"), Seq("bk"), "left_anti"), Seq("bk"))
+    val coldPairs = src.join(hotSea, Seq("bk"), "left_anti")
+      .join(sea.join(hotSea, Seq("bk"), "left_anti"), Seq("bk"))
 
     // merged url-ordered stream per hot block (search rows sort before a
-    // source row with the same url): one running sum gives BOTH the
-    // search row's 1-based rank among search rows and the source row's
-    // insertion position, so the probe is a plain (bk, rank) equi join —
-    // no bipartite join on the hot key ever happens. Blocks up to
-    // hotRankCap compute the running sum in one window; bigger blocks go
-    // through the distributed prefix sum (same values, no whole-key
-    // task) — mirroring the unpooled giant-block routing.
-    def probePairs(ranked: DataFrame): DataFrame = {
-      val seaIdx = ranked.filter(col("side") === 0)
-        .select(col("bk"), col("u").as("url2"), col("pos").as("rn"))
-      val srcProbe = ranked.filter(col("side") === 1)
-        .select(col("bk"), col("u").as("url1"),
-          explode(sequence(
-            greatest(lit(1L), col("pos") - cfg.hotWindow + 1),
-            col("pos") + cfg.hotWindow)).as("rn"))
-      srcProbe.join(seaIdx, Seq("bk", "rn"))
-        .select(col("bk"), col("url1"), col("url2"))
-    }
-    def merged(lo: Long, hi: Long): DataFrame = {
-      val band = hotSizes.filter(col("tot_n") > lo && col("tot_n") <= hi).select("bk")
-      sea.join(band, Seq("bk"), "left_semi")
-        .select(col("bk"), col("url2").as("u"), lit(0).as("side"))
-        .unionByName(src.join(band, Seq("bk"), "left_semi")
-          .select(col("bk"), col("url1").as("u"), lit(1).as("side")))
-    }
-    val mw = Window.partitionBy("bk").orderBy(col("u"), col("side"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val hotPairs = probePairs(
-      merged(0L, cfg.hotRankCap)
-        .withColumn("pos", sum(lit(1L) - col("side")).over(mw)))
-    val giantPairs = probePairs(
-      prefixSumWithinBlocks(
-        merged(cfg.hotRankCap.toLong, Long.MaxValue),
-        Seq("u", "side"), lit(1L) - col("side"), "pos"))
+    // source row with the same url): one distributed running sum gives
+    // BOTH the search row's 1-based rank among search rows and the source
+    // row's insertion position, so the probe is a plain (bk, rank) equi
+    // join — no bipartite join on the hot key ever happens, and no task
+    // ever owns a whole key, whichever pool makes the block big.
+    val merged = sea.join(hotSea, Seq("bk"), "left_semi")
+      .select(col("bk"), col("url2").as("u"), lit(0).as("side"))
+      .unionByName(src.join(hotSea, Seq("bk"), "left_semi")
+        .select(col("bk"), col("url1").as("u"), lit(1).as("side")))
+    val ranked = prefixSumWithinBlocks(merged, Seq("u", "side"), lit(1L) - col("side"), "pos")
+    val seaIdx = ranked.filter(col("side") === 0)
+      .select(col("bk"), col("u").as("url2"), col("pos").as("rn"))
+    val srcProbe = ranked.filter(col("side") === 1)
+      .select(col("bk"), col("u").as("url1"),
+        explode(sequence(
+          greatest(lit(1L), col("pos") - cfg.hotWindow + 1),
+          col("pos") + cfg.hotWindow)).as("rn"))
+    val hotPairs = srcProbe.join(seaIdx, Seq("bk", "rn"))
 
     val deduped = coldPairs.select(col("bk"), col("url1"), col("url2"))
-      .unionByName(hotPairs)
-      .unionByName(giantPairs)
+      .unionByName(hotPairs.select(col("bk"), col("url1"), col("url2")))
       .filter(col("url1") =!= col("url2"))
       .groupBy("url1", "url2")
       .agg(min("bk").as("block_key"), count(lit(1)).as("_n_keys"))
@@ -417,8 +373,7 @@ object ErPipeline {
     "state_norm", "zip_norm", "embedding")
 
   /** The classifier score as a pure column expression over two records'
-    * feature columns, given accessors for each side (so the same formula
-    * serves both the join-shaped scorer and the block-local fused path).
+    * feature columns, given an accessor for each side's columns.
     */
   private def scoreOf(a: String => Column, b: String => Column): Column = {
     val nonEmptyEq = (f: String) =>

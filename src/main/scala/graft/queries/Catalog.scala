@@ -983,9 +983,12 @@ object Catalog {
     val e = t(s, dir, "embeddings")
     val exact = Dedup.embeddingPairsExact(e, "vec_id", "embedding", 0.4)
     val approx = Dedup.embeddingPairsLsh(e, "vec_id", "embedding", 0.4)
+    // an empty exact set has nothing to miss: recall 1.0, not 0/0
+    val nExact = count(lit(1))
     exact.join(approx.withColumn("hit", lit(1)), Seq("id1", "id2"), "left")
-      .agg(count(lit(1)).as("n_exact"),
-        (sum(coalesce(col("hit"), lit(0))).cast("double") / count(lit(1))).as("recall"))
+      .agg(nExact.as("n_exact"),
+        when(nExact === 0, lit(1.0))
+          .otherwise(sum(coalesce(col("hit"), lit(0))).cast("double") / nExact).as("recall"))
       .select(col("n_exact"), (col("recall") >= 0.9).as("recall_ok"))
   }
 

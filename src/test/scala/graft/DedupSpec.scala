@@ -109,6 +109,16 @@ class DedupSpec extends SparkSpec {
     assert(recall >= 0.95, s"recall $recall too low")
   }
 
+  test("dedup_embedding_lsh: no pair at cosine 0.4 means recall ok, not null") {
+    // one-hot vectors: every pair has cosine 0, so the exact set is empty
+    val dir = java.nio.file.Files.createTempDirectory("graft_emb_empty").toString
+    (0L until 8L).map(i => (i, Array.tabulate(8)(d => if (d == i) 1.0f else 0.0f), 0))
+      .toDF("vec_id", "embedding", "label").write.parquet(s"$dir/embeddings.parquet")
+    val r = graft.queries.Catalog.queries("dedup_embedding_lsh")(spark, dir).head()
+    assert(r.getAs[Long]("n_exact") === 0L)
+    assert(r.getAs[Any]("recall_ok") == true, s"row: $r")
+  }
+
   test("interleaved dedup queries each keep their own signature cache") {
     // Two DIFFERENT dedup queries built before either executes: under the
     // old process-global persist slot the second construction evicted the

@@ -142,18 +142,57 @@ class PipelineSpec extends SparkSpec {
     assert(coldOnly.count() === 5L * 10)
   }
 
-  test("giant-block rank is distributed (>1 task per key) and matches the window rank") {
-    import spark.implicits._
-    // one planted 100k-member block: above the default hotRankCap. AQE
-    // sizes range partitions by BYTES (a 100k-row test block is a few MB
-    // and would legitimately coalesce to one partition; a real 10^8-row
-    // block would not) — shrink the advisory size so the test observes
-    // the multi-task split the real scale would produce.
-    val keys = Seq("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.coalescePartitions.minPartitionSize")
-    val prev = keys.map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      keys.foreach(k => spark.conf.set(k, "64k"))
+  /** No AQE coalescing: the range exchange keeps all shuffle partitions,
+    * so a hot key spans several of them and the rank offsets matter.
+    */
+  private def uncoalesced[T](body: => T): T =
+    withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false")(body)
+
+  private def pairSet(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+    df.select("url1", "url2", "block_key").collect().map(_.toSeq).toSet
+
+  /** Dedup emitted (url1, url2, key) triples to the min shared key. */
+  private def minKey(emitted: Seq[(String, String, String)]): Set[Seq[Any]] =
+    emitted.groupBy(p => (p._1, p._2))
+      .map { case ((u1, u2), ps) => Seq(u1, u2, ps.map(_._3).min) }.toSet
+
+  /** Brute-force sorted neighborhood over (key, url) rows: a block of at
+    * most maxBlock members pairs fully, a bigger one pairs each member
+    * with the next hotWindow members in url order.
+    */
+  private def refPairs(rows: Seq[(String, String)], c: ErPipeline.Config) =
+    minKey(rows.groupBy(_._1).toSeq.flatMap { case (bk, r) =>
+      val us = r.map(_._2).sorted
+      val reach = if (us.size > c.maxBlock) c.hotWindow else us.size
+      for (i <- us.indices; j <- i + 1 to math.min(i + reach, us.size - 1))
+        yield (us(i), us(j), bk)
+    })
+
+  /** Brute-force pooled probe: a search block of at most maxBlock members
+    * pairs fully; in a bigger one each source url pairs with the
+    * 2*hotWindow search urls nearest its own position in url order
+    * (equal urls: the search url comes first). No self pairs.
+    */
+  private def refPooled(src: Seq[(String, String)], sea: Seq[(String, String)],
+      c: ErPipeline.Config) = {
+    val seaBy = sea.groupBy(_._1).map { case (bk, r) => bk -> r.map(_._2).sorted }
+    minKey(src.flatMap { case (bk, u1) =>
+      val s = seaBy.getOrElse(bk, Nil)
+      val pos = s.count(_ <= u1)
+      val near = if (s.size <= c.maxBlock) s
+        else s.slice(math.max(0, pos - c.hotWindow), pos + c.hotWindow)
+      near.filter(_ != u1).map(u2 => (u1, u2, bk))
+    })
+  }
+
+  test("hot-block rank is distributed (>1 task per key) and equals the url sort order") {
+    // one planted 100k-member block. AQE sizes range partitions by BYTES
+    // (a 100k-row test block is a few MB and would legitimately coalesce
+    // to one partition; a real 10^8-row block would not) — shrink the
+    // advisory size so the test observes the multi-task split the real
+    // scale would produce.
+    withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64k",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64k") {
       val n = 100000
       val rows = spark.range(n)
         .select(lit("hot:block").as("bk"),
@@ -169,67 +208,51 @@ class PipelineSpec extends SparkSpec {
       assert(mismatch === 0L, "distributed rank diverges from url order")
       assert(ranked.select("rn").distinct().count() === n.toLong)
       ranked.unpersist()
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
-  test("giant-block pairing emits identical pairs to the single-window hot path") {
-    // same sigs, hotRankCap forced low vs high: the distributed path must
-    // reproduce the window path's sorted-neighborhood pairs exactly
+  test("hot-block pairing equals the brute-force sorted-neighborhood reference") {
     val sigs = ErPipeline.signatures(
       ErPipeline.normalize(ErPipeline.extract(pages)), cfg).cache()
-    val small = ErPipeline.Config(maxBlock = 2, hotWindow = 3, hotRankCap = 4)
-    val big = small.copy(hotRankCap = Int.MaxValue)
-    val viaGiant = ErPipeline.candidates(sigs, small)
-      .select("url1", "url2", "block_key").collect().map(_.toSeq).toSet
-    val viaWindow = ErPipeline.candidates(sigs, big)
-      .select("url1", "url2", "block_key").collect().map(_.toSeq).toSet
-    assert(viaGiant === viaWindow,
-      s"missing=${(viaWindow -- viaGiant).take(3)} extra=${(viaGiant -- viaWindow).take(3)}")
-    assert(viaGiant.nonEmpty)
+    val small = ErPipeline.Config(maxBlock = 2, hotWindow = 3)
+    val rows = sigs.select("url", "block_keys").collect().toSeq
+      .flatMap(r => r.getSeq[String](1).map(_ -> r.getString(0)))
+    assert(rows.groupBy(_._1).values.exists(_.size > small.maxBlock), "no hot block")
+    val got = uncoalesced(pairSet(ErPipeline.candidates(sigs, small)))
+    val want = refPairs(rows, small)
+    assert(got === want, s"missing=${(want -- got).take(3)} extra=${(got -- want).take(3)}")
+    assert(got.nonEmpty)
+    sigs.unpersist()
   }
 
-  test("pooled giant-block probe emits identical pairs to the pooled window path") {
+  /** One "hot" key over both pools; the pooled probe must equal refPooled. */
+  private def pooledHot(srcUrls: Seq[String], seaUrls: Seq[String],
+      c: ErPipeline.Config): Set[Seq[Any]] = {
     import spark.implicits._
-    // one hot key whose search side exceeds a tiny hotRankCap
-    val srcSigs = (0 until 30)
-      .map(i => (f"src://$i%04d", Seq("hot"))).toDF("url", "block_keys")
-    val seaSigs = (0 until 300)
-      .map(i => (f"sea://$i%04d", Seq("hot"))).toDF("url", "block_keys")
-    val small = ErPipeline.Config(maxBlock = 10, hotWindow = 4, hotRankCap = 50)
-    val big = small.copy(hotRankCap = Int.MaxValue)
-    val viaGiant = ErPipeline.candidatesPooled(srcSigs, seaSigs, small)
-      .select("url1", "url2", "block_key").collect().map(_.toSeq).toSet
-    val viaWindow = ErPipeline.candidatesPooled(srcSigs, seaSigs, big)
-      .select("url1", "url2", "block_key").collect().map(_.toSeq).toSet
-    assert(viaGiant === viaWindow,
-      s"missing=${(viaWindow -- viaGiant).take(3)} extra=${(viaGiant -- viaWindow).take(3)}")
-    assert(viaGiant.nonEmpty)
-    // still bounded: every source probes <= 2*hotWindow search neighbors
-    assert(viaGiant.size <= 30 * 2 * small.hotWindow)
+    def sigs(us: Seq[String]) = us.map(u => (u, Seq("hot"))).toDF("url", "block_keys")
+    val got = uncoalesced(pairSet(ErPipeline.candidatesPooled(sigs(srcUrls), sigs(seaUrls), c)))
+    val want = refPooled(srcUrls.map("hot" -> _), seaUrls.map("hot" -> _), c)
+    assert(got === want, s"missing=${(want -- got).take(3)} extra=${(got -- want).take(3)}")
+    assert(got.nonEmpty)
+    got
   }
 
-  test("pooled banding keys on the MERGED size: a giant SOURCE pool routes giant") {
-    import spark.implicits._
-    // search side is hot but modest (30 > maxBlock); the SOURCE side is
-    // what blows past hotRankCap — banding on sea_n alone would put the
-    // whole 330-row merged stream into one window task
-    val srcSigs = (0 until 300)
-      .map(i => (f"src://$i%04d", Seq("hot"))).toDF("url", "block_keys")
-    val seaSigs = (0 until 30)
-      .map(i => (f"sea://$i%04d", Seq("hot"))).toDF("url", "block_keys")
-    val small = ErPipeline.Config(maxBlock = 10, hotWindow = 4, hotRankCap = 50)
-    val big = small.copy(hotRankCap = Int.MaxValue)
-    val viaGiant = ErPipeline.candidatesPooled(srcSigs, seaSigs, small)
-      .select("url1", "url2", "block_key").collect().map(_.toSeq).toSet
-    val viaWindow = ErPipeline.candidatesPooled(srcSigs, seaSigs, big)
-      .select("url1", "url2", "block_key").collect().map(_.toSeq).toSet
-    assert(viaGiant === viaWindow,
-      s"missing=${(viaWindow -- viaGiant).take(3)} extra=${(viaGiant -- viaWindow).take(3)}")
-    assert(viaGiant.nonEmpty)
-    assert(viaGiant.size <= 300 * 2 * small.hotWindow)
+  private val pooledCfg = ErPipeline.Config(maxBlock = 10, hotWindow = 4)
+
+  // the two pools' urls interleave, and some source urls equal a search url
+  test("pooled hot-block probe equals the brute-force reference: search-heavy block") {
+    val got = pooledHot(
+      (0 until 30).map(i => f"u://${i * 10}%04d" + (if (i % 2 == 0) "" else "x")),
+      (0 until 300).map(i => f"u://$i%04d"), pooledCfg)
+    // bounded: every source probes <= 2*hotWindow search neighbors
+    assert(got.size <= 30 * 2 * pooledCfg.hotWindow)
+  }
+
+  test("pooled hot-block probe equals the brute-force reference: source-heavy block") {
+    val got = pooledHot(
+      (0 until 300).map(i => f"u://$i%04d" + (if (i % 3 == 0) "" else "x")),
+      (0 until 30).map(i => f"u://${i * 10}%04d"), pooledCfg)
+    assert(got.size <= 300 * 2 * pooledCfg.hotWindow)
   }
 
   test("incremental staleRows picks exactly new/updated urls (I1)") {

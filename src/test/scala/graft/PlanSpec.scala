@@ -144,21 +144,14 @@ class PlanSpec extends SparkSpec {
 
   test("AQE splits skewed join partitions at runtime (skew lever)") {
     import org.apache.spark.sql.functions._
-    val keys = Seq(
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.autoBroadcastJoinThreshold")
-    val prev = keys.map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      // shrink the skew thresholds to test-data scale; broadcast off so
-      // the join actually shuffles (the 100 TB fact-fact shape)
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16k")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16k")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // shrink the skew thresholds to test-data scale; broadcast off so
+    // the join actually shuffles (the 100 TB fact-fact shape)
+    withConf(
+        "spark.sql.adaptive.skewJoin.enabled" -> "true",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16k",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16k",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // one pathological key holds half the fact rows — the hot-key shape
       // salting guards against in the pipeline; here AQE must re-plan it
       val fact = spark.range(200000).select(
@@ -179,9 +172,6 @@ class PlanSpec extends SparkSpec {
       }
       assert(p.contains("skew=true") || p.toLowerCase.contains("skewed"),
         "AQE must mark the hot partition skewed and split it:\n" + p.take(1200))
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -6,6 +6,16 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One shared local session per suite (guide: one SparkSession per suite). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Runs `body` with session confs overridden, restoring them after. */
+  def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try { kv.foreach { case (k, v) => spark.conf.set(k, v) }; body }
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
 
 object SparkSpec {

@@ -20,6 +20,13 @@ class TextStreamSpec extends SparkSpec {
     assert(got === Seq("en", "es", "de", "en"))
   }
 
+  test("marker tokens match literally: '.' in a token is not a wildcard") {
+    val c = TextAnalysis.countTokens($"text", Seq("a.c", "x"))
+    val got = Seq("a.c abc x", "abc axc", "xa.c a.cx").toDF("text")
+      .select(c).collect().map(_.getInt(0)).toSeq
+    assert(got === Seq(2, 0, 0))
+  }
+
   test("quality features: hand-computed values") {
     val r = Seq("the cat and the hat!!").toDF("text")
       .select(
@@ -513,12 +520,9 @@ class TextStreamSpec extends SparkSpec {
     // a few-MB test key to one partition (a real 10^8-row stream would
     // not) — shrink the advisory size so the test observes the multi-task
     // split real scale would produce (same trick as PipelineSpec's
-    // giant-block rank test).
-    val keys = Seq("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.coalescePartitions.minPartitionSize")
-    val prev = keys.map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      keys.foreach(k => spark.conf.set(k, "64k"))
+    // hot-block rank test).
+    withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64k",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64k") {
       val n = 100000
       val rows = spark.range(1, n + 1)
         .select(lpad(col("id").cast("string"), 16, "0").as("ord"))
@@ -532,9 +536,6 @@ class TextStreamSpec extends SparkSpec {
       assert(agg.getLong(0) === n.toLong) // running sum reaches the total
       assert(agg.getLong(2) === n.toLong) // all prefix values distinct (no gaps/dupes)
       assert(agg.getLong(1) > 1L)         // the hot key spans multiple partitions
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }
